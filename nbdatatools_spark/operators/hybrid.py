@@ -7,24 +7,41 @@ top-k of base vectors RESTRICTED to the ordinals matching predicate i
 filtered vector search.
 
 Physical strategy: compile each predicate to a Column once (driver-side, the
-predicate table is small by construction — one row per query), build the
-per-query candidate set via the compiled filter, then run the same
-broadcast-crossJoin + windowed top-k as operators.knn but with an extra
-semi-join against the per-query match set. For large predicate counts the
-match sets are computed in ONE pass by unioning tagged filters (each
-predicate's matches tagged with its ordinal) — no per-predicate job.
+predicate table is small by construction — one row per query) and evaluate
+them all in ONE scan of the metadata, which tags every metadata row with the
+ids of the predicates it satisfies (``__pids``). ``result_indices_table``
+inverts that array into per-predicate match lists. ``hybrid_ground_truth``
+instead joins it to the base rows by ordinal and pushes the filter into the
+GEMM partial top-k kernel of operators.knn: each Arrow batch masks its
+(batch x Q) distance matrix by the rows' predicate ids, so candidate pairs
+are never materialized and the base table streams through once.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.operators.knn import _exact_knn_gemm
 from nbdatatools_spark.predicates.compiler import compile_pnode
 from nbdatatools_spark.predicates.pnode import PNode, parse_pnode
+
+
+def _predicate_ids(
+    meta: DataFrame, predicates: list[tuple[int, PNode | str]], ordinal: str
+) -> DataFrame:
+    """-> (__mord, __pids ARRAY<pid>): each metadata row with the ids of the
+    predicates it satisfies, all predicates evaluated in one projection."""
+    cols = []
+    for pid, node in predicates:
+        if isinstance(node, (str, bytes, dict)):
+            node = parse_pnode(node)
+        pred = compile_pnode(node, columns=meta.columns)
+        cols.append(F.when(pred, F.lit(pid)))
+    return meta.select(
+        F.col(ordinal).alias("__mord"),
+        F.array_compact(F.array(*cols)).alias("__pids"),
+    )
 
 
 def result_indices_table(
@@ -40,17 +57,9 @@ def result_indices_table(
     predicate as a boolean projection; explode+filter+collect keeps it a
     single shuffle keyed by predicate ordinal.
     """
-    cols = []
-    for pid, node in predicates:
-        if isinstance(node, (str, bytes, dict)):
-            node = parse_pnode(node)
-        pred = compile_pnode(node, columns=meta.columns)
-        cols.append(F.when(pred, F.lit(pid)))
-    tagged = meta.select(
-        F.col(ordinal).alias("__mord"),
-        F.array_compact(F.array(*cols)).alias("__pids"),
+    exploded = _predicate_ids(meta, predicates, ordinal).select(
+        "__mord", F.explode("__pids").alias("pid")
     )
-    exploded = tagged.select("__mord", F.explode("__pids").alias("pid"))
     return (
         exploded.groupBy("pid")
         .agg(F.array_sort(F.collect_list("__mord")).alias("matches"))
@@ -71,38 +80,22 @@ def hybrid_ground_truth(
     """Filtered KNN answer key: for each query i, top-k over base vectors
     whose ordinal satisfies predicate i.
 
-    Returns (ordinal, indices, distances) like exact_knn. The per-query
-    allowed sets ride along the broadcast query side as arrays — the big base
-    table still streams through exactly once.
+    Returns (ordinal, indices, distances) like exact_knn, ordered by
+    (distance, base ordinal), NULL (zero-magnitude cosine) last. Queries
+    with no predicate, or whose predicate matches no base vector, have no
+    row. Metadata ordinals are unique: one metadata row per vector.
     """
-    matches = result_indices_table(meta, predicates, ordinal)
-    q = queries.select(
-        F.col(ordinal).alias("__qid"), F.col(vec).alias("__qvec")
-    ).join(
-        matches.select(F.col(ordinal).alias("__qid"), F.col("matches").alias("__allowed")),
-        "__qid",
-        "inner",
+    pids = _predicate_ids(meta, predicates, ordinal).where(F.size("__pids") > 0)
+    b = base.select(F.col(ordinal).alias("__bid"), F.col(vec).alias("__bvec")).join(
+        pids, F.col("__bid") == F.col("__mord")
     )
-    b = base.select(F.col(ordinal).alias("__bid"), F.col(vec).alias("__bvec"))
-    pairs = (
-        b.crossJoin(F.broadcast(q))
-        .where(F.array_contains(F.col("__allowed"), F.col("__bid").cast("bigint")))
-        .select(
-            "__qid",
-            "__bid",
-            distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-        )
+    nn = _exact_knn_gemm(
+        queries, b, k, metric, ordinal, "__bid", vec, "__bvec", allowed="__pids"
     )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-    )
-    topk = pairs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
-    return (
-        topk.groupBy("__qid")
-        .agg(F.array_sort(F.collect_list(F.struct("__rn", "__bid", "__dist"))).alias("__nn"))
-        .select(
-            F.col("__qid").alias(ordinal),
-            F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            F.transform("__nn", lambda s: s["__dist"]).alias("distances"),
-        )
+    qtype = queries.schema[ordinal].dataType.simpleString()
+    btype = base.schema[ordinal].dataType.simpleString()
+    return nn.select(
+        F.col("ordinal").cast(qtype).alias(ordinal),
+        F.col("indices").cast(f"array<{btype}>").alias("indices"),
+        "distances",
     )

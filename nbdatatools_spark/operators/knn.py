@@ -27,11 +27,11 @@ from functools import reduce
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.functions.distance import METRICS, distance_expr
 
 
 def exact_knn(
@@ -55,7 +55,7 @@ def exact_knn(
 
     ``impl``:
     - ``"gemm"`` (default — the scale path): numpy/BLAS matrix kernel via
-      Arrow-batched mapInPandas with PER-BATCH PARTIAL TOP-K (the SIMD
+      Arrow-batched mapInArrow with PER-BATCH PARTIAL TOP-K (the SIMD
       analogue of the reference's Panama-vector kernels,
       src/main/java25/.../DistanceFunction.java:199-232). Only Q*k rows per
       Arrow batch reach the merge shuffle — never the Q*B cross product.
@@ -122,6 +122,51 @@ def exact_knn(
     )
 
 
+def _matrix(col: pa.Array, n: int) -> np.ndarray:
+    """(n x d) float64 matrix from an Arrow list column of equal-length
+    vectors: the flat child buffer reshaped, no per-row Python objects."""
+    lens = np.diff(col.offsets.to_numpy())
+    d = int(lens[0]) if n else 0
+    if (lens != d).any():
+        dims = sorted(set(lens.tolist()))
+        raise ValueError(f"vectors of unequal dimension in one batch: {dims}")
+    return col.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, d)
+
+
+def _allowed_mask(col: pa.Array, n: int, q_ids: np.ndarray) -> np.ndarray:
+    """(n x Q) mask: base row r may answer query j when q_ids[j] is one of
+    the predicate ids listed in row r of the Arrow list column ``col``."""
+    lens = np.diff(col.offsets.to_numpy())
+    pids = col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    rows = np.repeat(np.arange(n), lens)
+    order = np.argsort(q_ids, kind="stable")
+    pos = np.minimum(np.searchsorted(q_ids[order], pids), len(q_ids) - 1)
+    hit = q_ids[order][pos] == pids
+    mask = np.zeros((n, len(q_ids)), dtype=bool)
+    mask[rows[hit], order[pos[hit]]] = True
+    return mask
+
+
+def _select_topk(key: np.ndarray, bids: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(rows, cols) of the k smallest keys in each column of ``key``
+    (batch x Q), ties at the k-th key going to the lowest base ordinals —
+    the same (distance, ordinal) rule as the final merge, so a tie that
+    straddles k inside one batch keeps the right candidates. NaN keys are
+    never selected; a column with fewer than k other keys keeps them all."""
+    kk = min(k, key.shape[0])
+    kth = np.partition(key, kk - 1, axis=0)[kk - 1]
+    lt = key < kth
+    eq = key == kth
+    order = np.argsort(bids, kind="stable")
+    within = np.empty_like(eq)
+    within[order] = np.cumsum(eq[order], axis=0) <= (kk - lt.sum(axis=0))
+    sel = lt | (eq & within)
+    short = np.isnan(kth)
+    if short.any():
+        sel[:, short] = ~np.isnan(key[:, short])
+    return np.nonzero(sel)
+
+
 def _exact_knn_gemm(
     queries: DataFrame,
     base: DataFrame,
@@ -132,21 +177,30 @@ def _exact_knn_gemm(
     query_vec: str,
     base_vec: str,
     max_broadcast_queries: int = 65536,
+    allowed: str | None = None,
 ) -> DataFrame:
     """BLAS path: the query block (small side by construction) is collected
     to a numpy matrix and broadcast; each Arrow batch of the base table
     computes a (batch x Q) distance matrix with one GEMM and keeps its local
-    top-k per query (argpartition). The final merge reduces Q*k*n_batches
-    candidate rows — a tiny shuffle — with the same (dist, ordinal)
-    tie-break as the expr path.
+    top-k per query. The final merge reduces Q*k*n_batches candidate rows —
+    a tiny shuffle — with the same (dist, ordinal) tie-break as the expr
+    path.
+
+    ``allowed`` names a base list column of query ordinals: base row r is a
+    candidate for query q only when q is in its list (the filtered answer
+    key, operators.hybrid). Masked pairs are never emitted, so a query with
+    no allowed base row has no output row.
 
     ``max_broadcast_queries`` guards the driver collect (VERDICT r1 #6): a
     query side larger than the cap is processed in pmod blocks, each
     collected and broadcast separately, results unioned — bounded driver
     memory at any query-side size (~64Mi floats per block at 256d)."""
+    metric_key = metric.strip().lower()
+    if metric_key not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}")
     spark = base.sparkSession
-    qrows = queries.select(query_ordinal, query_vec).limit(max_broadcast_queries + 1).collect()
-    if len(qrows) > max_broadcast_queries:
+    qtab = queries.select(query_ordinal, query_vec).limit(max_broadcast_queries + 1).toArrow()
+    if qtab.num_rows > max_broadcast_queries:
         n = queries.count()
         n_blocks = -(-n // max_broadcast_queries)  # ceil
         blocks = [
@@ -154,27 +208,28 @@ def _exact_knn_gemm(
                 queries.where(F.pmod(F.col(query_ordinal), F.lit(n_blocks)) == i),
                 base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec,
                 max_broadcast_queries=n + 1,  # each block is now under the cap
+                allowed=allowed,
             )
             for i in range(n_blocks)
         ]
         return reduce(DataFrame.unionByName, blocks)
-    if not qrows:
+    if not qtab.num_rows:
         return spark.createDataFrame(
             [], f"ordinal BIGINT, indices ARRAY<BIGINT>, distances ARRAY<DOUBLE>"
         )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    qids = qtab.column(0).to_numpy().astype(np.int64)
+    qmat = _matrix(qtab.column(1).combine_chunks(), qtab.num_rows)
     bc = spark.sparkContext.broadcast((qids, qmat))
-    metric_key = metric.strip().lower()
 
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q_ids, Q = bc.value
         qn = np.linalg.norm(Q, axis=1)
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            bids = pdf[base_ordinal].to_numpy(dtype=np.int64)
-            B = np.array(list(pdf[base_vec]), dtype=np.float64)
+            bids = batch.column(0).to_numpy().astype(np.int64)
+            B = _matrix(batch.column(1), n)
             if metric_key in ("cosine",):
                 bn = np.linalg.norm(B, axis=1)
                 denom = np.outer(bn, qn)
@@ -190,7 +245,7 @@ def _exact_knn_gemm(
                 )
             elif metric_key in ("dot_product",):
                 D = -(B @ Q.T)
-            elif metric_key in ("manhattan", "l1"):
+            else:  # manhattan / l1
                 # L1 has no GEMM form; chunk the query axis so the (batch,
                 # q_chunk, dim) intermediate stays ~128MB regardless of
                 # batch size (the full tensor is batch*Q*dim*8B — tens of
@@ -200,18 +255,20 @@ def _exact_knn_gemm(
                 for s in range(0, Q.shape[0], q_chunk):
                     e = min(s + q_chunk, Q.shape[0])
                     D[:, s:e] = np.abs(B[:, None, :] - Q[None, s:e, :]).sum(axis=2)
-            else:
-                raise ValueError(f"unknown metric {metric!r}")
-            kk = min(k, len(bids))
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]  # (kk, Q)
-            rows = {
-                "__qid": np.repeat(q_ids, kk),
-                "__bid": bids[idx.T.ravel()],
-                "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(rows)
+            # NaN (zero magnitude) ranks after every finite distance, as
+            # the merge's NaN-last order does; masked pairs become NaN keys,
+            # which are never selected
+            key = np.where(np.isnan(D), np.inf, D)
+            if allowed is not None:
+                key[~_allowed_mask(batch.column(2), n, q_ids)] = np.nan
+            rows, cols = _select_topk(key, bids, k)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q_ids[cols]), pa.array(bids[rows]), pa.array(D[rows, cols])],
+                ["__qid", "__bid", "__dist"],
+            )
 
-    partials = base.select(base_ordinal, base_vec).mapInPandas(
+    cols = [base_ordinal, base_vec] + ([allowed] if allowed is not None else [])
+    partials = base.select(*cols).mapInArrow(
         partial_topk, "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
     )
     w = Window.partitionBy("__qid").orderBy(
@@ -300,7 +357,7 @@ def verify_knn(
     metric: str = "cosine",
     sample_size: int = 100,
     seed: int = 42,
-    impl: str = "expr",
+    impl: str = "gemm",
 ) -> DataFrame:
     """End-to-end verify_knn: sample queries deterministically, recompute KNN,
     compare to the stored answer key (03-cli-reference.md:201-218 defaults:

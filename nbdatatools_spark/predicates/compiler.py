@@ -6,73 +6,27 @@ Semantics mirror spec/predicates/PredicateEvaluator.java exactly:
   promotion: int comparand -> compare as long, float comparand -> as double
   (PredicateEvaluator.java:146-187)
 - IN membership (:159-166), MATCHES = FULL-string regex
-  (``Pattern.matches``, :207) -> compiled to an anchored ``rlike``
+  (``Pattern.matches``, :207) -> compiled to an anchored ``RLIKE``
 - null field matches only EQ-with-NullVal (:82-99); all other ops on a null
   field are false. The compiled Column therefore wraps in coalesce(..., false)
   so three-valued SQL nulls collapse to the reference's two-valued logic.
 - AND = all children, OR = any child (:54-71)
 - bool fields only support EQ/NE (:212-221)
 
-The same tree renders to SQL via predicates.sqlcodec — evaluation and
-rendering are two views of one structure, exactly as in the reference
-(SURVEY §3.3).
+Evaluation and rendering are two views of one structure, as in the
+reference (SURVEY §3.3): the tree renders to one Spark SQL expression
+(``sqlcodec.render_sql(node, "spark")``, which holds every rule above) and
+Spark parses it once. Building the Column node by node instead costs a
+driver<->JVM round trip per Column operation, ~35 per tree node.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import and_, or_
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.predicates.pnode import Conjugate, PNode, PredicateLeaf
-
-
-def _lit(value) -> Column:
-    """Typed literal with reference promotion rules: python int -> long,
-    float -> double (PredicateEvaluator.java:33-35,146-187)."""
-    if isinstance(value, bool):
-        return F.lit(value)
-    if isinstance(value, int):
-        return F.lit(value).cast("long")
-    if isinstance(value, float):
-        return F.lit(value).cast("double")
-    return F.lit(value)
-
-
-def _leaf_to_column(leaf: PredicateLeaf, col: Column) -> Column:
-    op = leaf.op
-    first = leaf.values[0]
-    if first is None:
-        # Null comparand: only EQ-with-null can ever match, and it matches
-        # exactly the null-field rows (PredicateEvaluator.java:82-99).
-        return col.isNull() if op == "EQ" else F.lit(False)
-    if op == "MATCHES":
-        # Pattern.matches is full-match (PredicateEvaluator.java:207);
-        # rlike is find() — anchor with a non-capturing group.
-        return col.rlike(f"^(?:{first})$")
-    # IntVal comparand: the reference narrows the FIELD value to long
-    # (fieldVal.longValue(), truncation toward zero — PredicateEvaluator.
-    # java:148-150), so field=45.5 GT 45 is FALSE there. Spark would instead
-    # widen the long literal to double. Cast the column to long to match
-    # (Spark's double->long cast also truncates toward zero). The cast is a
-    # no-op (elided) on integral columns; on double columns it trades parquet
-    # pushdown for exact reference semantics — use float comparands when you
-    # want a pushable range scan over doubles. (ADVICE r1.)
-    if isinstance(first, int) and not isinstance(first, bool):
-        col = col.cast("long")
-    if op == "IN":
-        return col.isin([v for v in leaf.values if v is not None])
-    cmp = {
-        "GT": col.__gt__,
-        "LT": col.__lt__,
-        "EQ": col.__eq__,
-        "NE": col.__ne__,
-        "GE": col.__ge__,
-        "LE": col.__le__,
-    }[op]
-    return cmp(_lit(first))
+from nbdatatools_spark.predicates.pnode import PNode
+from nbdatatools_spark.predicates.sqlcodec import render_sql
 
 
 def compile_pnode(
@@ -91,21 +45,8 @@ def compile_pnode(
     """
     if columns is not None:
         node = node.resolve(columns)
-
-    def go(n: PNode) -> Column:
-        if isinstance(n, Conjugate):
-            children = [go(c) for c in n.nodes]
-            return reduce(and_ if n.op == "AND" else or_, children)
-        name = n.field_name
-        if name is None:
-            raise ValueError(
-                "unresolved positional predicate; pass columns= to resolve "
-                "(mirrors PredicateEvaluator.java:74-81 which requires named predicates)"
-            )
-        return _leaf_to_column(n, F.col(name))
-
-    out = go(node)
-    return F.coalesce(out, F.lit(False)) if two_valued else out
+    sql = render_sql(node, "spark")
+    return F.expr(f"coalesce({sql}, false)" if two_valued else sql)
 
 
 def where_pnode(df, node: PNode, columns: list[str] | None = None):

@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> str:
+    """Cores for ``local[N]``: ``SPARK_GRAFT_CPUS`` when set, else the cores
+    this process may run on (a larger N only adds scheduling overhead)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "nbdatatools-spark",
     master: str | None = None,
@@ -36,7 +42,7 @@ def get_spark(
             f"{pkg_root}{os.pathsep}{prev}" if prev else pkg_root
         )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

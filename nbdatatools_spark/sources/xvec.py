@@ -5,9 +5,12 @@ little-endian; every record is ``[dim:int32][dim * component]``; uniform
 dimension per file, so stride = 4 + dim*componentBytes and ordinal =
 offset / stride — O(1) random access in the reference
 (CoreXVecVectorDatasetViewMethods.java:119,155), which here becomes
-*parallel chunk planning*: the driver reads one header per file, splits the
-file into ordinal-aligned byte ranges, and executors decode ranges
-independently with numpy (Arrow-batched, no per-row Python).
+*parallel chunk planning*: the driver reads one header per file and builds a
+table with one row per file (dim, stride, count, first ordinal, records per
+chunk, first chunk id). The scan is ``spark.range`` over the chunk ids, so
+planning ships no per-chunk rows and needs no exchange; executors derive each
+chunk's ordinal-aligned byte range from the file table and decode it with
+numpy (Arrow-batched, no per-row Python).
 
 Formats (readers: datatools-io-xvec/.../readers/Uniform{F,I,B,D,S,M}vecReader.java):
 
@@ -92,10 +95,10 @@ def read_xvec(
 ) -> DataFrame:
     """Parallel xvec scan -> DataFrame (ordinal BIGINT, vector ARRAY<elem>).
 
-    Driver plans (path, byte_offset, ordinal, count) chunks from uniform
-    stride; executors decode chunks with numpy via mapInPandas (Arrow
-    batches). Multiple files concatenate with continuous ordinals (U1 +
-    multi-file groups, ParquetVectorStreamer.java:80-90 analogue).
+    Driver plans ordinal-aligned chunks from the uniform stride; executors
+    decode chunks with numpy via mapInArrow. Multiple files concatenate with
+    continuous ordinals (U1 + multi-file groups,
+    ParquetVectorStreamer.java:80-90 analogue).
 
     ``chunk_records=None`` sizes chunks to ~8MB of file bytes (clamped to
     [1024, 65536] records): the round-1 fixed 64Ki-record chunks made a
@@ -113,27 +116,24 @@ def read_xvec(
         raise ValueError("no input paths")
     np_dtype, cbytes, spark_elem = xvec_dtype(paths[0])
 
-    chunks = []  # (path, byte_start, n_records, start_ordinal)
+    # one row per non-empty file:
+    # (path, dim, stride, count, first ordinal, records per chunk, first chunk id)
+    files = []
     ordinal = ordinal_start
+    n_chunks = 0
     for p in sorted(paths):
-        d, c, s = xvec_dtype(p)
-        if d != np_dtype:
+        if xvec_dtype(p)[0] != np_dtype:
             raise ValueError(f"mixed xvec formats in one read: {paths}")
         dim, stride, count = _file_meta(p)
-        n_chunk = chunk_records or max(1024, min(65536, (8 << 20) // max(stride, 1)))
-        off = 0
-        while off < count:
-            n = min(n_chunk, count - off)
-            chunks.append((p, off * stride, n, ordinal + off, dim, stride))
-            off += n
+        if count:
+            per = chunk_records or max(1024, min(65536, (8 << 20) // stride))
+            files.append((p, dim, stride, count, ordinal, per, n_chunks))
+            n_chunks += -(-count // per)
         ordinal += count
+    first_chunk = np.array([f[6] for f in files], dtype=np.int64)
 
-    # guard: all-empty inputs -> repartition(0) throws (ADVICE r1)
-    n_parts = max(1, min(len(chunks), max(spark.sparkContext.defaultParallelism * 2, 32), 4096))
-    plan = spark.createDataFrame(
-        chunks,
-        "path STRING, byte_start BIGINT, n_records INT, start_ordinal BIGINT, dim INT, stride INT",
-    ).repartition(n_parts)
+    n_parts = max(1, min(n_chunks, max(spark.sparkContext.defaultParallelism * 2, 32), 4096))
+    plan = spark.range(0, n_chunks, 1, n_parts)
 
     widen = {"<u1": "<i2", "<f2": "<f4"}.get(np_dtype)
     arrow_elem = {
@@ -147,29 +147,29 @@ def read_xvec(
         # mapInArrow + ListArray.from_arrays: zero per-row Python objects —
         # the whole chunk converts as two flat buffers
         for batch in batches:
-            for row in batch.to_pylist():
-                with open(row["path"], "rb") as f:
-                    f.seek(row["byte_start"])
-                    raw = f.read(row["n_records"] * row["stride"])
-                n = row["n_records"]
-                mat = np.frombuffer(raw, dtype=np.uint8).reshape(n, row["stride"])
+            for chunk in batch.column(0).to_numpy():
+                f = int(np.searchsorted(first_chunk, chunk, side="right")) - 1
+                path, dim, stride, count, first_ordinal, per, first = files[f]
+                start = (int(chunk) - first) * per
+                n = min(per, count - start)
+                with open(path, "rb") as fh:
+                    fh.seek(start * stride)
+                    raw = fh.read(n * stride)
+                mat = np.frombuffer(raw, dtype=np.uint8).reshape(n, stride)
                 headers = mat[:, :4].copy().view("<i4").ravel()
-                if validate_dims and not (headers == row["dim"]).all():
-                    bad = int(headers[headers != row["dim"]][0])
-                    raise ValueError(
-                        f"{row['path']}: record header dim {bad} != file dim {row['dim']}"
-                    )
+                if validate_dims and not (headers == dim).all():
+                    bad = int(headers[headers != dim][0])
+                    raise ValueError(f"{path}: record header dim {bad} != file dim {dim}")
                 body = mat[:, 4:].copy().view(np_dtype)
                 if widen:
                     body = body.astype(widen)
-                dim = row["dim"]
                 offsets = pa.array(
                     np.arange(0, (n + 1) * dim, dim, dtype=np.int32), type=pa.int32()
                 )
                 values = pa.Array.from_pandas(body.ravel(), type=arrow_elem)
                 vectors = pa.ListArray.from_arrays(offsets, values)
                 ordinals = pa.array(
-                    np.arange(row["start_ordinal"], row["start_ordinal"] + n),
+                    np.arange(first_ordinal + start, first_ordinal + start + n),
                     type=pa.int64(),
                 )
                 yield pa.RecordBatch.from_arrays(

@@ -22,6 +22,23 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    """DuckDB over the sf tables, as scripts/check_oracle.py registers them."""
+    import duckdb
+
+    con = duckdb.connect()
+    for name in (
+        "region nation customer supplier part orders lineitem "
+        "events documents embeddings".split()
+    ):
+        p = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{p}'")
+    yield con
+    con.close()
+
+
 @pytest.fixture(scope="session")
 def embeddings(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))

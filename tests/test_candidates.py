@@ -6,9 +6,7 @@ The staging registry (`__spark_entry__.candidate_queries()`) is empty
 right after a rotation; the whole module skips cleanly then."""
 
 import math
-import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as e
@@ -37,20 +35,6 @@ def _canon(cols, rows):
         (tuple(_norm(r[i]) for i in idx) for r in rows),
         key=_none_safe_key,
     )
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings".split()
-    ):
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{p}'")
-    yield con
-    con.close()
 
 
 ORACLED = sorted(e.candidate_oracles())

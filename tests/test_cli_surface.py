@@ -216,6 +216,43 @@ def test_facet_alias_resolution(tmp_path, spark):
         m.facet(spark, "my_custom_facet")
 
 
+def test_cli_verify_knn_matches_expr(tmp_path, spark, capsys):
+    """analyze verify_knn runs the GEMM kernel by default and reports the
+    recall the replayable expr path computes, on a truth with wrong entries."""
+    import json as _json
+    import struct
+
+    from nbdatatools_spark.__main__ import main
+    from nbdatatools_spark.operators.knn import verify_knn
+    from nbdatatools_spark.sources.xvec import read_xvec
+
+    rng = np.random.default_rng(5)
+    base, queries = rng.normal(size=(80, 6)), rng.normal(size=(12, 6))
+    cos = 1 - (queries @ base.T) / np.outer(
+        np.linalg.norm(queries, axis=1), np.linalg.norm(base, axis=1)
+    )
+    truth = np.argsort(cos, axis=1, kind="stable")[:, :5]
+    truth[::2, 3:] = truth[::2, 3:] + 40  # wrong neighbours in half the rows
+    paths = {n: str(tmp_path / f"{n}.{ext}") for n, ext in
+             (("base", "fvec"), ("queries", "fvec"), ("truth", "ivec"))}
+    for name, mat, dt in (("base", base, "<f4"), ("queries", queries, "<f4"),
+                          ("truth", truth % 80, "<i4")):
+        with open(paths[name], "wb") as f:
+            for row in mat:
+                f.write(struct.pack("<i", len(row)) + np.asarray(row, dt).tobytes())
+    rc = main(["analyze", "verify_knn", "--input", paths["base"], "--queries",
+               paths["queries"], "--truth", paths["truth"], "--k", "5",
+               "--sample", "12", "--min-recall", "0"])
+    rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    want = verify_knn(
+        read_xvec(spark, paths["queries"]), read_xvec(spark, paths["base"]),
+        read_xvec(spark, paths["truth"]).withColumnRenamed("vector", "indices"),
+        k=5, sample_size=12, impl="expr",
+    ).collect()[0]
+    assert rc == 0 and rep["n_queries"] == 12
+    assert rep["mean_recall"] == want["mean_recall"] < 1.0
+
+
 def test_cli_main_end_to_end(tmp_path, spark, capsys):
     """python -m nbdatatools_spark: the nbvectors-shaped command tree runs
     end-to-end — generate, analyze, compute knn, verify, convert, merkle

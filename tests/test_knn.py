@@ -101,6 +101,48 @@ def test_gemm_impl_matches_expr(vecs):
         assert a == b, f"gemm != expr for {metric}"
 
 
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dot_product"])
+def test_gemm_boundary_ties_match_expr(spark, metric):
+    """Twelve copies of the query vector tie at the top and straddle k inside
+    one Arrow batch: the kernel must keep the lowest ordinals of the tie, as
+    the (distance, ordinal) rule of the expr path does. Integer components
+    make every tied distance bit-identical on both paths."""
+    rng = np.random.default_rng(7)
+    mat = rng.integers(-3, 3, size=(60, 4))  # never reaches [3, 3, 3, 3]
+    dup = [3, 7, 12, 20, 21, 30, 33, 41, 47, 52, 55, 59]
+    mat[dup] = 3
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(mat)],
+        "ordinal BIGINT, vector ARRAY<FLOAT>",
+    ).coalesce(1)
+    q = base.where(F.col("ordinal").isin(3, 5))
+    got = {
+        impl: {r["ordinal"]: list(r["indices"]) for r in exact_knn(q, base, K, metric, impl=impl).collect()}
+        for impl in ("expr", "gemm")
+    }
+    assert got["gemm"] == got["expr"]
+    assert got["gemm"][3] == dup[:K]
+
+
+def test_select_topk_equals_lexsort():
+    """Per-batch selection == the first k of a (key, ordinal) sort, on
+    tie-heavy keys with NaN (masked) entries."""
+    from nbdatatools_spark.operators.knn import _select_topk
+
+    rng = np.random.default_rng(3)
+    for _ in range(200):
+        n, q, k = rng.integers(1, 40), rng.integers(1, 6), rng.integers(1, 12)
+        key = rng.integers(0, 4, size=(n, q)).astype(float)
+        key[rng.random((n, q)) < 0.3] = np.nan
+        key[rng.random((n, q)) < 0.1] = np.inf
+        bids = rng.permutation(1000)[:n]
+        rows, cols = _select_topk(key, bids, k)
+        for j in range(q):
+            ok = np.flatnonzero(~np.isnan(key[:, j]))
+            want = ok[np.lexsort((bids[ok], key[ok, j]))][:k]
+            assert sorted(rows[cols == j]) == sorted(want)
+
+
 def test_verify_knn_sampled(vecs):
     df, _ = vecs
     truth = exact_knn(df, df, K, "cosine").cache()
@@ -144,6 +186,37 @@ def test_hybrid_filtered_truth(vecs):
         d = np.sqrt(((m64[allowed] - m64[qi]) ** 2).sum(axis=1))
         order = allowed[np.lexsort((allowed, d))][:K]
         assert got[qi] == [int(x) for x in order]
+
+
+def test_hybrid_edge_cases(spark):
+    """A predicate with no match and a query with no predicate give no row;
+    a predicate with no query is ignored; zero-magnitude vectors rank after
+    every finite distance with a NULL distance. Cross-checked against the
+    brute-force top-k over each allowed set."""
+    rng = np.random.default_rng(11)
+    mat = rng.normal(size=(12, 3))
+    mat[[2, 6]] = 0.0
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(mat)],
+        "ordinal BIGINT, vector ARRAY<DOUBLE>",
+    )
+    meta = spark.createDataFrame(
+        [(i, "a" if i % 3 != 1 else "b") for i in range(12)], "ordinal BIGINT, grp STRING"
+    )
+    preds = [
+        (0, '{"fieldName":"grp","op":"EQ","values":["a"]}'),
+        (1, '{"fieldName":"grp","op":"EQ","values":["none"]}'),
+        (5, '{"fieldName":"grp","op":"EQ","values":["b"]}'),
+    ]
+    q = base.where(F.col("ordinal").isin(0, 1, 2))
+    rows = hybrid_ground_truth(q, base, meta, preds, k=10, metric="cosine").collect()
+    assert [r["ordinal"] for r in rows] == [0]
+    finite = [i for i in range(12) if i % 3 != 1 and i not in (2, 6)]
+    d = 1 - mat[finite] @ mat[0] / (np.linalg.norm(mat[finite], axis=1) * np.linalg.norm(mat[0]))
+    want = [finite[i] for i in np.lexsort((finite, d))] + [2, 6]
+    assert list(rows[0]["indices"]) == want
+    assert rows[0]["distances"][-1] is None and rows[0]["distances"][-2] is None
+    np.testing.assert_allclose(rows[0]["distances"][:-2], np.sort(d), rtol=0, atol=1e-12)
 
 
 def test_knn_label_accuracy_closed_form(spark):

@@ -149,6 +149,31 @@ def test_sql_render_quoting():
     assert render_sql(node, "duckdb") == "name IS NULL"  # semantic dialect
 
 
+def test_sql_render_spark_dialect():
+    """The dialect compile_pnode parses: escaped strings, typed literals,
+    the int-comparand field cast, anchored RLIKE, backticked dotted names."""
+    def spark_sql(d):
+        return render_sql(parse_pnode(d), "spark")
+
+    assert spark_sql({"fieldName": "name", "op": "EQ", "values": ["it's \\ ü"]}) == (
+        "`name` = 'it\\'s \\\\ ü'"
+    )
+    assert spark_sql({"fieldName": "name", "op": "MATCHES", "values": ["a\\.b|'"]}) == (
+        "`name` RLIKE '^(?:a\\\\.b|\\')$'"
+    )
+    assert spark_sql({"fieldName": "number", "op": "GE", "values": [-(2**63)]}) == (
+        "CAST(`number` AS BIGINT) >= -9223372036854775808L"
+    )
+    assert spark_sql({"fieldName": "score", "op": "IN", "values": [-0.0, float("nan")]}) == (
+        "`score` IN (CAST('-0.0' AS DOUBLE), CAST('nan' AS DOUBLE))"
+    )
+    assert spark_sql({"fieldName": "a.b`c", "op": "NE", "values": [True]}) == "`a`.`b``c` != true"
+    assert spark_sql({"fieldName": "name", "op": "EQ", "values": [None]}) == "`name` IS NULL"
+    assert spark_sql({"fieldName": "name", "op": "LT", "values": [None]}) == "false"
+    with pytest.raises(ValueError, match="unresolved positional"):
+        spark_sql({"field": 0, "op": "EQ", "values": [1]})
+
+
 def test_sql_render_matches_like_quirk():
     """Reference renders MATCHES as LIKE (PNodeSqlCodec.java sqlOp); the
     duckdb dialect renders true full-regex semantics."""
@@ -172,6 +197,19 @@ PREDS = [
         {"op": "OR", "nodes": [
             {"fieldName": "flag", "op": "EQ", "values": [True]},
             {"fieldName": "category", "op": "EQ", "values": ["c"]}]}]},
+    {"fieldName": "name", "op": "EQ", "values": ["it's"]},
+    {"fieldName": "name", "op": "GT", "values": ["a\\b"]},
+    {"fieldName": "name", "op": "LT", "values": ["ü"]},
+    {"fieldName": "name", "op": "NE", "values": [""]},
+    {"fieldName": "name", "op": "MATCHES", "values": ["it'.|name_\\d"]},
+    {"fieldName": "score", "op": "LE", "values": [-0.0]},
+    {"fieldName": "score", "op": "LT", "values": [float("inf")]},
+    {"fieldName": "score", "op": "GT", "values": [float("-inf")]},
+    {"fieldName": "score", "op": "EQ", "values": [float("nan")]},
+    {"fieldName": "number", "op": "LE", "values": [2**63 - 1]},
+    {"fieldName": "number", "op": "GT", "values": [-(2**63)]},
+    {"fieldName": "flag", "op": "NE", "values": [False]},
+    {"fieldName": "number", "op": "NE", "values": [None]},
 ]
 
 

@@ -14,23 +14,33 @@ from hypothesis import strategies as st
 
 from nbdatatools_spark.predicates import compile_pnode, parse_pnode, render_sql
 
+INF, NAN = float("inf"), float("nan")
 ROWS = [
-    (0, "name_1", 10, 0.5, True, "a"),
-    (1, "name_2", 20, 0.25, False, "b"),
-    (2, "name_3", 30, 0.75, True, "c"),
-    (3, None, 40, 0.0, False, "a"),
-    (4, "name_5", None, 1.0, True, "b"),
-    (5, "it's", 60, 0.1, None, "c"),
-    (6, "name_2", -5, 0.33, True, "a"),
-    (7, "", 0, 0.99, False, "b"),
+    (0, "name_1", 10, 0.5, True, "a", {"tag": "x"}),
+    (1, "name_2", 20, 0.25, False, "b", {"tag": "it's"}),
+    (2, "name_3", 30, 0.75, True, "c", None),
+    (3, None, 40, 0.0, False, "a", {"tag": None}),
+    (4, "name_5", None, 1.0, True, "b", {"tag": "a\\b"}),
+    (5, "it's", 60, 0.1, None, "c", {"tag": ""}),
+    (6, "name_2", -5, 0.33, True, "a", {"tag": "x"}),
+    (7, "", 0, 0.99, False, "b", {"tag": "ünï"}),
+    (8, "a\\b", 2**63 - 1, -0.0, True, "a.b", {"tag": "y"}),
+    (9, "ünï 😀", -(2**63), INF, False, "'", {"tag": "x"}),
+    (10, "a.b*c$", 2**62, -INF, None, "\\", {"tag": "z"}),
+    (11, "\\'", 1, NAN, True, "", {"tag": "y"}),
 ]
-SCHEMA = "ordinal BIGINT, name STRING, number BIGINT, score DOUBLE, flag BOOLEAN, category STRING"
+SCHEMA = (
+    "ordinal BIGINT, name STRING, number BIGINT, score DOUBLE, flag BOOLEAN, "
+    "category STRING, info STRUCT<tag: STRING>"
+)
 
 _num_ops = st.sampled_from(["GT", "LT", "EQ", "NE", "GE", "LE"])
-_numbers = st.sampled_from([-5, 0, 10, 20, 35, 60, 100])
-_scores = st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0])
-_texts = st.sampled_from(["name_1", "name_2", "it's", "", "zzz"])
-_cats = st.sampled_from(["a", "b", "c", "x"])
+_numbers = st.sampled_from([-5, 0, 10, 20, 35, 60, 100, 2**63 - 1, -(2**63), 2**62])
+_scores = st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0, -0.0, INF, -INF, NAN])
+_texts = st.sampled_from(
+    ["name_1", "name_2", "it's", "", "zzz", "a\\b", "\\'", "ünï 😀", "a.b*c$", "'"]
+)
+_cats = st.sampled_from(["a", "b", "c", "x", "a.b", "'", "\\", ""])
 
 
 def _leaf():
@@ -55,13 +65,26 @@ def _leaf():
             st.lists(_cats, min_size=1, max_size=3),
         ),
         st.builds(
-            lambda v: {"fieldName": "flag", "op": "EQ", "values": [v]},
+            lambda op, v: {"fieldName": "flag", "op": op, "values": [v]},
+            st.sampled_from(["EQ", "NE"]),
             st.booleans(),
         ),
-        st.just({"fieldName": "name", "op": "EQ", "values": [None]}),
+        st.builds(
+            lambda op, v: {"fieldName": "info.tag", "op": op, "values": [v]},
+            st.sampled_from(["EQ", "NE", "GE"]),
+            st.sampled_from(["x", "y", "it's", "a\\b", ""]),
+        ),
+        st.builds(
+            lambda f, op: {"fieldName": f, "op": op, "values": [None]},
+            st.sampled_from(["name", "number", "score", "flag", "info.tag"]),
+            st.sampled_from(["EQ", "NE", "GT"]),
+        ),
         st.builds(
             lambda p: {"fieldName": "name", "op": "MATCHES", "values": [p]},
-            st.sampled_from(["name_[0-9]+", "n.*", ".*'s", "name_2"]),
+            st.sampled_from(
+                ["name_[0-9]+", "n.*", ".*'s", "name_2", "a\\\\b", "a\\.b\\*c\\$",
+                 "\\\\'", "ünï.*", "(it|a)'?.*", ""]
+            ),
         ),
     )
 
@@ -84,14 +107,14 @@ def harness(spark):
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE meta (ordinal BIGINT, name VARCHAR, number BIGINT, "
-        "score DOUBLE, flag BOOLEAN, category VARCHAR)"
+        "score DOUBLE, flag BOOLEAN, category VARCHAR, info STRUCT(tag VARCHAR))"
     )
-    con.executemany("INSERT INTO meta VALUES (?,?,?,?,?,?)", ROWS)
+    con.executemany("INSERT INTO meta VALUES (?,?,?,?,?,?,?)", ROWS)
     return meta, con
 
 
 @settings(
-    max_examples=40,
+    max_examples=60,
     deadline=None,
     derandomize=True,  # driver reruns replay exactly the validated examples
     suppress_health_check=[HealthCheck.function_scoped_fixture],

@@ -60,14 +60,31 @@ def test_write_then_read(spark, tmp_path):
 
 
 def test_multifile_concat_ordinals(spark, tmp_path):
+    """Files concatenate in path order with continuous ordinals; an empty
+    file contributes nothing; chunks never span a file boundary."""
     rng = np.random.default_rng(1)
     a, b = rng.normal(size=(5, 4)).astype("<f4"), rng.normal(size=(7, 4)).astype("<f4")
-    pa, pb = str(tmp_path / "a.fvec"), str(tmp_path / "b.fvec")
+    pa, pb, pe = (str(tmp_path / n) for n in ("a.fvec", "c.fvec", "b.fvec"))
     _write_raw(pa, a, "<f4")
     _write_raw(pb, b, "<f4")
-    df = read_xvec(spark, [pa, pb])
-    assert df.count() == 12
-    assert df.agg(F.max("ordinal")).collect()[0][0] == 11
+    open(pe, "wb").close()
+    for chunk_records, ordinal_start in ((None, 0), (3, 0), (2, 100)):
+        df = read_xvec(
+            spark, [pb, pe, pa], ordinal_start=ordinal_start, chunk_records=chunk_records
+        )
+        rows = df.orderBy("ordinal").collect()
+        assert [r["ordinal"] for r in rows] == list(range(ordinal_start, ordinal_start + 12))
+        np.testing.assert_array_equal(
+            np.array([r["vector"] for r in rows], "<f4"), np.vstack([a, b])
+        )
+
+
+def test_empty_input_reads_no_rows(spark, tmp_path):
+    p = str(tmp_path / "empty.fvec")
+    open(p, "wb").close()
+    df = read_xvec(spark, p)
+    assert df.count() == 0
+    assert df.schema.simpleString() == "struct<ordinal:bigint,vector:array<float>>"
 
 
 def test_corrupt_header_dim_raises(spark, tmp_path):
