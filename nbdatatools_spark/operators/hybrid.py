@@ -19,10 +19,12 @@ are never materialized and the base table streams through once.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.operators.knn import _exact_knn_gemm
+from nbdatatools_spark.operators.knn import _exact_knn_gemm, _metric_scorer, _neighbor_arrays
 from nbdatatools_spark.predicates.compiler import compile_pnode
 from nbdatatools_spark.predicates.pnode import PNode, parse_pnode
 
@@ -42,6 +44,20 @@ def _predicate_ids(
         F.col(ordinal).alias("__mord"),
         F.array_compact(F.array(*cols)).alias("__pids"),
     )
+
+
+def _allowed_mask(col: pa.Array, n: int, q_ids: np.ndarray) -> np.ndarray:
+    """(n x Q) mask: base row r may answer query j when q_ids[j] is one of
+    the predicate ids listed in row r of the Arrow list column ``col``."""
+    lens = np.diff(col.offsets.to_numpy())
+    pids = col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    rows = np.repeat(np.arange(n), lens)
+    order = np.argsort(q_ids, kind="stable")
+    pos = np.minimum(np.searchsorted(q_ids[order], pids), len(q_ids) - 1)
+    hit = q_ids[order][pos] == pids
+    mask = np.zeros((n, len(q_ids)), dtype=bool)
+    mask[rows[hit], order[pos[hit]]] = True
+    return mask
 
 
 def result_indices_table(
@@ -88,10 +104,21 @@ def hybrid_ground_truth(
     pids = _predicate_ids(meta, predicates, ordinal).where(F.size("__pids") > 0)
     b = base.select(F.col(ordinal).alias("__bid"), F.col(vec).alias("__bvec")).join(
         pids, F.col("__bid") == F.col("__mord")
-    )
-    nn = _exact_knn_gemm(
-        queries, b, k, metric, ordinal, "__bid", vec, "__bvec", allowed="__pids"
-    )
+    ).select("__bid", "__bvec", "__pids")
+    knn_scorer = _metric_scorer(metric)
+
+    def scorer(q):
+        q_ids = q[0].to_numpy().astype(np.int64)
+        score = knn_scorer(q)
+
+        def masked(batch):
+            D, key = score(batch)
+            key[~_allowed_mask(batch.column(2), batch.num_rows, q_ids)] = np.nan
+            return D, key
+
+        return masked
+
+    nn = _neighbor_arrays(_exact_knn_gemm(queries.select(ordinal, vec), b, k, scorer))
     qtype = queries.schema[ordinal].dataType.simpleString()
     btype = base.schema[ordinal].dataType.simpleString()
     return nn.select(

@@ -16,6 +16,9 @@ Physical strategy (scale posture):
   single shuffle of Q*k rows, not Q*B.
 - Tie-break is (distance, base ordinal) ascending — deterministic under float
   associativity (SURVEY §7 "What's hard").
+- That broadcast-query kernel (``_exact_knn_gemm``) is the package's only
+  top-k kernel: operators.hybrid, similarity.hard_negatives, pq_topk and
+  ivfpq_topk run on it with their own per-batch scorers.
 - For both-sides-large workloads, `exact_knn` accepts `block_partitions` to
   split the query side into chunks that are broadcast sequentially (union of
   plans — Catalyst schedules them as independent stages).
@@ -32,6 +35,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.functions.distance import METRICS, distance_expr
+
+# Row cap on one broadcast query block (VERDICT r1 #6): ~64Mi floats per
+# block at 256d bounds the driver collect at any query-side size.
+MAX_BROADCAST_QUERIES = 65536
 
 
 def exact_knn(
@@ -75,8 +82,13 @@ def exact_knn(
       BLAS kernel at reference scale, so gemm remains the default.
     """
     if impl == "gemm":
-        return _exact_knn_gemm(
-            queries, base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec
+        return _neighbor_arrays(
+            _exact_knn_gemm(
+                queries.select(query_ordinal, query_vec),
+                base.select(base_ordinal, base_vec),
+                k,
+                _metric_scorer(metric),
+            )
         )
     q = queries.select(
         F.col(query_ordinal).alias("__qid"), F.col(query_vec).alias("__qvec")
@@ -91,12 +103,7 @@ def exact_knn(
             "__bid",
             distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
         )
-        # nulls/NaN LAST: zero-magnitude cosine yields NULL (policy) and plain
-        # asc would rank NULLs first, polluting every top-k with zero vectors
-        w = Window.partitionBy("__qid").orderBy(
-            F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-        )
-        return pairs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
+        return _rank_topk(pairs, k)
 
     if block_partitions <= 1:
         topk = one_block(q)
@@ -106,18 +113,34 @@ def exact_knn(
             for i in range(block_partitions)
         ]
         topk = reduce(DataFrame.unionByName, blocks)
+    return _neighbor_arrays(topk)
 
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The first k rows per query of (__qid, __bid, __dist) with their rank
+    ``__rn``, ordered by (distance, base ordinal). NULL and NaN distances
+    rank last: zero-magnitude cosine yields NULL (policy), and plain asc
+    would rank NULLs first, polluting every top-k with zero vectors."""
+    w = Window.partitionBy("__qid").orderBy(
+        F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
+    )
+    return pairs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
+
+
+def _neighbor_arrays(topk: DataFrame) -> DataFrame:
+    """Ranked (__qid, __rn, __bid, __dist) rows -> one (ordinal, indices,
+    distances) row per query, a NaN distance (numpy's zero-magnitude
+    marker) reported as NULL as the expr path's cosine policy does."""
     return (
         topk.groupBy("__qid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__rn", "__bid", "__dist"))
-            ).alias("__nn")
-        )
+        .agg(F.array_sort(F.collect_list(F.struct("__rn", "__bid", "__dist"))).alias("__nn"))
         .select(
             F.col("__qid").alias("ordinal"),
             F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            F.transform("__nn", lambda s: s["__dist"]).alias("distances"),
+            F.transform(
+                "__nn",
+                lambda s: F.when(F.isnan(s["__dist"]), F.lit(None)).otherwise(s["__dist"]),
+            ).alias("distances"),
         )
     )
 
@@ -133,18 +156,52 @@ def _matrix(col: pa.Array, n: int) -> np.ndarray:
     return col.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, d)
 
 
-def _allowed_mask(col: pa.Array, n: int, q_ids: np.ndarray) -> np.ndarray:
-    """(n x Q) mask: base row r may answer query j when q_ids[j] is one of
-    the predicate ids listed in row r of the Arrow list column ``col``."""
-    lens = np.diff(col.offsets.to_numpy())
-    pids = col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-    rows = np.repeat(np.arange(n), lens)
-    order = np.argsort(q_ids, kind="stable")
-    pos = np.minimum(np.searchsorted(q_ids[order], pids), len(q_ids) - 1)
-    hit = q_ids[order][pos] == pids
-    mask = np.zeros((n, len(q_ids)), dtype=bool)
-    mask[rows[hit], order[pos[hit]]] = True
-    return mask
+def _distance_matrix(B: np.ndarray, Q: np.ndarray, metric: str) -> np.ndarray:
+    """(batch x Q) distances of the rows of B to the rows of Q under a
+    lower-case METRICS name; zero-magnitude cosine pairs are NaN."""
+    if metric == "cosine":
+        denom = np.outer(np.linalg.norm(B, axis=1), np.linalg.norm(Q, axis=1))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            D = 1.0 - (B @ Q.T) / denom
+        D[denom == 0] = np.nan
+        return D
+    if metric in ("euclidean", "l2"):
+        return np.sqrt(
+            np.maximum(
+                (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :], 0.0
+            )
+        )
+    if metric == "dot_product":
+        return -(B @ Q.T)
+    # manhattan / l1 has no GEMM form; chunk the query axis so the (batch,
+    # q_chunk, dim) intermediate stays ~128MB regardless of batch size (the
+    # full tensor is batch*Q*dim*8B — tens of GB at production batch shapes)
+    q_chunk = max(1, int(16e6 // max(B.shape[0] * B.shape[1], 1)))
+    D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
+    for s in range(0, Q.shape[0], q_chunk):
+        e = min(s + q_chunk, Q.shape[0])
+        D[:, s:e] = np.abs(B[:, None, :] - Q[None, s:e, :]).sum(axis=2)
+    return D
+
+
+def _metric_scorer(metric: str):
+    """exact_knn's scorer: the metric distance, NaN (zero magnitude) ranked
+    after every finite distance as the merge's NaN-last order does. An
+    unknown metric raises here, when the plan is built."""
+    key = metric.strip().lower()
+    if key not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}")
+
+    def scorer(q: list[pa.Array]):
+        Q = _matrix(q[1], len(q[1]))
+
+        def score(batch: pa.RecordBatch):
+            D = _distance_matrix(_matrix(batch.column(1), batch.num_rows), Q, key)
+            return D, np.where(np.isnan(D), np.inf, D)
+
+        return score
+
+    return scorer
 
 
 def _select_topk(key: np.ndarray, bids: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -167,128 +224,61 @@ def _select_topk(key: np.ndarray, bids: np.ndarray, k: int) -> tuple[np.ndarray,
     return np.nonzero(sel)
 
 
-def _exact_knn_gemm(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    metric: str,
-    query_ordinal: str,
-    base_ordinal: str,
-    query_vec: str,
-    base_vec: str,
-    max_broadcast_queries: int = 65536,
-    allowed: str | None = None,
-) -> DataFrame:
-    """BLAS path: the query block (small side by construction) is collected
-    to a numpy matrix and broadcast; each Arrow batch of the base table
-    computes a (batch x Q) distance matrix with one GEMM and keeps its local
-    top-k per query. The final merge reduces Q*k*n_batches candidate rows —
-    a tiny shuffle — with the same (dist, ordinal) tie-break as the expr
-    path.
+def _exact_knn_gemm(queries: DataFrame, base: DataFrame, k: int, scorer) -> DataFrame:
+    """The package's one broadcast-query top-k kernel. The query side (small
+    by construction) is collected as Arrow and broadcast; each Arrow batch
+    of the base table scores every query and keeps its local top-k per
+    query, so only Q*k rows per batch reach the merge shuffle — never the
+    Q*B cross product. Returns ranked rows (__qid, __rn, __bid, __dist),
+    at most k per query, ordered by (distance, base ordinal).
 
-    ``allowed`` names a base list column of query ordinals: base row r is a
-    candidate for query q only when q is in its list (the filtered answer
-    key, operators.hybrid). Masked pairs are never emitted, so a query with
-    no allowed base row has no output row.
+    ``queries`` and ``base`` each have their ordinal as the first column;
+    the other columns are whatever the scorer reads. ``scorer(q)`` runs
+    once per task on the broadcast query columns (a list of Arrow arrays,
+    q[0] the query ordinals) and returns ``score(batch)``, which maps one
+    Arrow base batch to a (batch x Q) distance matrix D (emitted as
+    ``__dist``) and a selection key of the same shape. Per batch and query
+    the k smallest keys are kept, ties at the k-th key going to the lowest
+    base ordinals; NaN keys are never selected and infinite keys rank
+    last. The merge window applies the same (distance, ordinal) rule to D,
+    so the scorer keeps D and key in the same order.
 
-    ``max_broadcast_queries`` guards the driver collect (VERDICT r1 #6): a
-    query side larger than the cap is processed in pmod blocks, each
-    collected and broadcast separately, results unioned — bounded driver
-    memory at any query-side size (~64Mi floats per block at 256d)."""
-    metric_key = metric.strip().lower()
-    if metric_key not in METRICS:
-        raise ValueError(f"unknown metric {metric!r}")
+    A query side over MAX_BROADCAST_QUERIES rows is split into pmod blocks
+    on the query ordinal, each collected and broadcast separately, so the
+    driver memory stays bounded at any query-side size."""
     spark = base.sparkSession
-    qtab = queries.select(query_ordinal, query_vec).limit(max_broadcast_queries + 1).toArrow()
-    if qtab.num_rows > max_broadcast_queries:
-        n = queries.count()
-        n_blocks = -(-n // max_broadcast_queries)  # ceil
-        blocks = [
-            _exact_knn_gemm(
-                queries.where(F.pmod(F.col(query_ordinal), F.lit(n_blocks)) == i),
-                base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec,
-                max_broadcast_queries=n + 1,  # each block is now under the cap
-                allowed=allowed,
-            )
-            for i in range(n_blocks)
-        ]
-        return reduce(DataFrame.unionByName, blocks)
-    if not qtab.num_rows:
-        return spark.createDataFrame(
-            [], f"ordinal BIGINT, indices ARRAY<BIGINT>, distances ARRAY<DOUBLE>"
-        )
-    qids = qtab.column(0).to_numpy().astype(np.int64)
-    qmat = _matrix(qtab.column(1).combine_chunks(), qtab.num_rows)
-    bc = spark.sparkContext.broadcast((qids, qmat))
+    blocks = [queries.limit(MAX_BROADCAST_QUERIES + 1).toArrow()]
+    if blocks[0].num_rows > MAX_BROADCAST_QUERIES:
+        n_blocks = -(-queries.count() // MAX_BROADCAST_QUERIES)  # ceil
+        block = F.pmod(F.col(queries.columns[0]), F.lit(n_blocks))
+        blocks = [queries.where(block == i).toArrow() for i in range(n_blocks)]
+    partials = [_partial_topk(base, k, scorer, qtab) for qtab in blocks if qtab.num_rows]
+    if not partials:
+        return spark.createDataFrame([], "__qid BIGINT, __bid BIGINT, __dist DOUBLE, __rn INT")
+    return _rank_topk(reduce(DataFrame.unionByName, partials), k)
+
+
+def _partial_topk(base: DataFrame, k: int, scorer, qtab: pa.Table) -> DataFrame:
+    """(__qid, __bid, __dist): each base batch's top-k candidates for the
+    queries of one broadcast block."""
+    bc = base.sparkSession.sparkContext.broadcast([c.combine_chunks() for c in qtab.columns])
 
     def partial_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        q_ids, Q = bc.value
-        qn = np.linalg.norm(Q, axis=1)
+        q = bc.value
+        q_ids = q[0].to_numpy().astype(np.int64)
+        score = scorer(q)
         for batch in batches:
-            n = batch.num_rows
-            if not n:
+            if not batch.num_rows:
                 continue
             bids = batch.column(0).to_numpy().astype(np.int64)
-            B = _matrix(batch.column(1), n)
-            if metric_key in ("cosine",):
-                bn = np.linalg.norm(B, axis=1)
-                denom = np.outer(bn, qn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = 1.0 - (B @ Q.T) / denom
-                D[denom == 0] = np.nan  # zero-magnitude -> NULL policy
-            elif metric_key in ("euclidean", "l2"):
-                D = np.sqrt(
-                    np.maximum(
-                        (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-            elif metric_key in ("dot_product",):
-                D = -(B @ Q.T)
-            else:  # manhattan / l1
-                # L1 has no GEMM form; chunk the query axis so the (batch,
-                # q_chunk, dim) intermediate stays ~128MB regardless of
-                # batch size (the full tensor is batch*Q*dim*8B — tens of
-                # GB at production batch shapes)
-                q_chunk = max(1, int(16e6 // max(B.shape[0] * B.shape[1], 1)))
-                D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
-                for s in range(0, Q.shape[0], q_chunk):
-                    e = min(s + q_chunk, Q.shape[0])
-                    D[:, s:e] = np.abs(B[:, None, :] - Q[None, s:e, :]).sum(axis=2)
-            # NaN (zero magnitude) ranks after every finite distance, as
-            # the merge's NaN-last order does; masked pairs become NaN keys,
-            # which are never selected
-            key = np.where(np.isnan(D), np.inf, D)
-            if allowed is not None:
-                key[~_allowed_mask(batch.column(2), n, q_ids)] = np.nan
+            D, key = score(batch)
             rows, cols = _select_topk(key, bids, k)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(q_ids[cols]), pa.array(bids[rows]), pa.array(D[rows, cols])],
                 ["__qid", "__bid", "__dist"],
             )
 
-    cols = [base_ordinal, base_vec] + ([allowed] if allowed is not None else [])
-    partials = base.select(*cols).mapInArrow(
-        partial_topk, "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-    )
-    topk = partials.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
-    return (
-        topk.groupBy("__qid")
-        .agg(F.array_sort(F.collect_list(F.struct("__rn", "__bid", "__dist"))).alias("__nn"))
-        .select(
-            F.col("__qid").alias("ordinal"),
-            F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            # NaN (numpy's zero-magnitude marker) -> NULL, matching the expr
-            # path's cosine policy
-            F.transform(
-                "__nn",
-                lambda s: F.when(F.isnan(s["__dist"]), F.lit(None)).otherwise(s["__dist"]),
-            ).alias("distances"),
-        )
-    )
+    return base.mapInArrow(partial_topk, "__qid BIGINT, __bid BIGINT, __dist DOUBLE")
 
 
 def knn_pairs(

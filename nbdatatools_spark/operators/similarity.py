@@ -24,7 +24,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.functions.distance import distance_expr
-from nbdatatools_spark.operators.knn import exact_knn
+from nbdatatools_spark.operators.knn import (
+    _exact_knn_gemm,
+    _matrix,
+    _metric_scorer,
+    _rank_topk,
+    exact_knn,
+)
 
 
 def brute_force_topk(
@@ -311,7 +317,7 @@ def pq_encode(
     per Arrow batch; the codebooks (and the optional OPQ ``rotation``,
     applied as ``X @ R`` before subspace assignment) broadcast once."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     spark = base.sparkSession
     bc = spark.sparkContext.broadcast(
@@ -321,10 +327,10 @@ def pq_encode(
     def encode(batches):
         books, rot = bc.value
         m, n_codes, dsub = books.shape
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
+            X = _matrix(batch.column(1), batch.num_rows)
             if rot is not None:
                 X = X @ rot
             codes = np.empty((len(X), m), dtype=np.uint8)
@@ -332,11 +338,65 @@ def pq_encode(
                 sub = X[:, s * dsub : (s + 1) * dsub]
                 d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(-1)
                 codes[:, s] = d2.argmin(1)
-            yield pd.DataFrame(
-                {"id": pdf[base_id].to_numpy(), "codes": [c.tobytes() for c in codes]}
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).cast(pa.int64()), pa.array([c.tobytes() for c in codes])],
+                ["id", "codes"],
             )
 
-    return base.select(base_id, vec_col).mapInPandas(encode, "id BIGINT, codes BINARY")
+    return base.select(base_id, vec_col).mapInArrow(encode, "id BIGINT, codes BINARY")
+
+
+def _code_matrix(col, m: int):
+    """(n x m) uint8 matrix of an Arrow BINARY column of m-byte codes."""
+    import numpy as np
+    import pyarrow as pa
+
+    fixed = col.cast(pa.binary(m))
+    return np.frombuffer(
+        fixed.buffers()[1], np.uint8, count=len(fixed) * m, offset=fixed.offset * m
+    ).reshape(-1, m)
+
+
+def _ranked_pairs(topk: DataFrame) -> DataFrame:
+    """Ranked (__qid, __rn, __bid, __dist) rows -> (query_id, rank, base_id,
+    distance)."""
+    return topk.select(
+        F.col("__qid").alias("query_id"),
+        F.col("__rn").alias("rank"),
+        F.col("__bid").alias("base_id"),
+        F.col("__dist").alias("distance"),
+    )
+
+
+def _exact_rerank(
+    queries: DataFrame,
+    rerank_base: DataFrame,
+    shortlist: DataFrame,
+    k: int,
+    metric: str,
+    query_id: str,
+    base_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact re-rank (the IVFADC+rerank production shape): the Q*k*factor
+    shortlist of (__qid, __bid) pairs is tiny, so broadcast it against the
+    raw vectors, recompute the true distance on just those candidates, and
+    keep the k best per query. Quantization error then only matters at the
+    shortlist boundary."""
+    qdf = queries.select(F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec"))
+    cand = (
+        rerank_base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
+        .join(F.broadcast(shortlist.select("__qid", "__bid")), "__bid")
+        .join(F.broadcast(qdf), "__qid")
+    )
+    return _rank_topk(
+        cand.select(
+            "__qid",
+            "__bid",
+            distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
+        ),
+        k,
+    )
 
 
 def pq_topk(
@@ -348,7 +408,6 @@ def pq_topk(
     query_id: str = "vec_id",
     base_id: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = 65536,
     rerank_base: DataFrame | None = None,
     rerank_factor: int = 4,
     rotation=None,
@@ -359,12 +418,16 @@ def pq_topk(
     orthogonal, so euclidean and dot distances are preserved exactly;
     the exact re-rank path reads RAW vectors and needs no rotation).
 
-    Same physical shape as the exact GEMM kernel — queries broadcast, each
-    Arrow batch of CODES computes its local top-k from per-query lookup
-    tables, the merge shuffles only Q*k*n_batches candidate rows. Metrics:
-    ``euclidean`` (additive squared-L2, reported as sqrt) and ``dot``
-    (additive inner product, reported negated); for cosine, L2-normalize
-    vectors before encoding and use ``dot``.
+    Runs on the exact KNN kernel (operators.knn._exact_knn_gemm): queries
+    broadcast, each Arrow batch of CODES scores them from per-query lookup
+    tables and keeps its local top-k, the merge shuffles only
+    Q*k*n_batches candidate rows. Ties break on (ADC distance, base_id) at
+    every step, so duplicate codes straddling the k-th place keep the
+    lowest ids; a query side over the kernel's row cap is processed in
+    blocks automatically. Metrics: ``euclidean`` (additive squared-L2,
+    reported as sqrt) and ``dot`` (additive inner product, reported
+    negated); for cosine, L2-normalize vectors before encoding and use
+    ``dot``.
 
     Pass the raw vector table as ``rerank_base`` to re-rank an ADC
     shortlist of ``k * rerank_factor`` candidates by EXACT distance —
@@ -372,26 +435,17 @@ def pq_topk(
     extra cost is one broadcast join on Q*k*factor rows.
     """
     import numpy as np
-    import pandas as pd
 
-    spark = encoded.sparkSession
     metric_key = metric.strip().lower()
     if metric_key not in ("euclidean", "l2", "dot", "dot_product"):
         raise ValueError(f"pq_topk supports euclidean/dot, got {metric!r}")
-    qrows = queries.select(query_id, vec_col).limit(max_broadcast_queries + 1).collect()
-    if len(qrows) > max_broadcast_queries:
-        raise ValueError(
-            f"query side exceeds max_broadcast_queries={max_broadcast_queries}; "
-            "block the query side as in exact_knn"
-        )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    if rotation is not None:
-        qmat = qmat @ np.asarray(rotation)
-    bc = spark.sparkContext.broadcast((qids, qmat, np.asarray(codebooks)))
+    books = np.asarray(codebooks)
+    rot = None if rotation is None else np.asarray(rotation)
 
-    def adc_partial(batches):
-        q_ids, Q, books = bc.value
+    def scorer(q):
+        Q = _matrix(q[1], len(q[1]))
+        if rot is not None:
+            Q = Q @ rot
         m, n_codes, dsub = books.shape
         # LUT[q, s, c] = subspace distance contribution
         subq = Q.reshape(len(Q), m, dsub)
@@ -400,67 +454,28 @@ def pq_topk(
             lut = ((subq[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
         else:  # dot: negative inner product so smaller = closer
             lut = -(subq[:, :, None, :] * books[None, :, :, :]).sum(-1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf["id"].to_numpy(dtype=np.int64)
-            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, m)
+
+        def score(batch):
+            codes = _code_matrix(batch.column(1), m)
             D = np.zeros((len(codes), len(Q)))
             for s in range(m):
                 D += lut[:, s, codes[:, s]].T
-            kk = min(k, len(bids))
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            yield pd.DataFrame(
-                {
-                    "__qid": np.repeat(q_ids, kk),
-                    "__bid": bids[idx.T.ravel()],
-                    "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-                }
-            )
+            return D, D
 
-    partials = encoded.mapInPandas(adc_partial, "__qid BIGINT, __bid BIGINT, __dist DOUBLE")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
+        return score
+
     shortlist_k = k * rerank_factor if rerank_base is not None else k
-    out = partials.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= shortlist_k)
-    if rerank_base is None:
-        dist = F.sqrt("__dist") if metric_key in ("euclidean", "l2") else F.col("__dist")
-        return out.select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            dist.alias("distance"),
+    topk = _exact_knn_gemm(
+        queries.select(query_id, vec_col), encoded.select("id", "codes"), shortlist_k, scorer
+    )
+    if rerank_base is not None:
+        exact_metric = {"dot": "dot_product"}.get(metric_key, metric_key)
+        topk = _exact_rerank(
+            queries, rerank_base, topk, k, exact_metric, query_id, base_id, vec_col
         )
-    # Exact re-rank (the IVFADC+rerank production shape): the Q*k*factor
-    # shortlist is tiny, so broadcast it against the raw vectors, recompute
-    # the true distance on just those candidates, and re-rank. Quantization
-    # error then only matters at the shortlist boundary.
-    qdf = queries.select(
-        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec")
-    )
-    cand = (
-        rerank_base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
-        .join(F.broadcast(out.select("__qid", "__bid")), "__bid")
-        .join(F.broadcast(qdf), "__qid")
-    )
-    exact_metric = {"dot": "dot_product"}.get(metric_key, metric_key)
-    rer = cand.select(
-        "__qid",
-        "__bid",
-        distance_expr(exact_metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-    )
-    w2 = Window.partitionBy("__qid").orderBy(
-        F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    elif metric_key in ("euclidean", "l2"):
+        topk = topk.withColumn("__dist", F.sqrt("__dist"))
+    return _ranked_pairs(topk)
 
 
 # --- IVFADC: IVF coarse quantizer + PQ on residuals ------------------------
@@ -487,7 +502,7 @@ def ivfpq_build(
     per vector, so even a full scan reads d*4/m x less than raw floats.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     spark = base.sparkSession
     rows = base.select(vec_col).limit(sample_limit).collect()
@@ -534,10 +549,10 @@ def ivfpq_build(
     def encode(batches):
         C, B = bc.value
         mm, ncodes, ds = B.shape
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X_ = np.array(list(pdf[vec_col]), dtype=np.float64)
+            X_ = _matrix(batch.column(1), batch.num_rows)
             cid = ((X_[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
             R = X_ - C[cid]
             codes = np.empty((len(X_), mm), dtype=np.uint8)
@@ -545,15 +560,16 @@ def ivfpq_build(
                 sub = R[:, s * ds : (s + 1) * ds]
                 dd = ((sub[:, None, :] - B[s][None, :, :]) ** 2).sum(-1)
                 codes[:, s] = dd.argmin(1)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[base_id].to_numpy(),
-                    "centroid_id": cid.astype(np.int32),
-                    "codes": [c.tobytes() for c in codes],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).cast(pa.int64()),
+                    pa.array(cid.astype(np.int32)),
+                    pa.array([c.tobytes() for c in codes]),
+                ],
+                ["id", "centroid_id", "codes"],
             )
 
-    encoded = base.select(base_id, vec_col).mapInPandas(
+    encoded = base.select(base_id, vec_col).mapInArrow(
         encode, "id BIGINT, centroid_id INT, codes BINARY"
     )
     return encoded, (centroids, books)
@@ -567,114 +583,63 @@ def ivfpq_topk(
     nprobe: int = 4,
     query_id: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = 65536,
     rerank_base: DataFrame | None = None,
     rerank_factor: int = 4,
     base_id: str = "vec_id",
 ) -> DataFrame:
     """IVFADC search (euclidean): probe the nprobe nearest centroids per
-    query, ADC-score only codes in probed cells (per-query residual LUTs),
-    per-batch partial top-k, tiny merge. Optional exact re-rank as in
+    query and ADC-score only codes in probed cells (per-query residual
+    LUTs), on the exact KNN kernel of :func:`pq_topk` — the same
+    (distance, base_id) tie rule at every step and the same automatic
+    blocking of a large query side. Optional exact re-rank as in
     :func:`pq_topk`.
 
-    The probe mask costs one (rows x Q) boolean per batch; rows in cells no
-    query probes contribute nothing. Combined with centroid_id bucketing
-    (or partition pruning on a centroid_id-partitioned table) the scan
-    itself skips unprobed data at 100TB.
+    A (Q x cells) slot table maps each row's cell to its residual LUT per
+    query; rows in cells a query does not probe are never selected for it.
     """
     import numpy as np
-    import pandas as pd
 
-    spark = encoded.sparkSession
     centroids, books = index
-    qrows = queries.select(query_id, vec_col).limit(max_broadcast_queries + 1).collect()
-    if len(qrows) > max_broadcast_queries:
-        raise ValueError("query side exceeds max_broadcast_queries")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qc = ((Q[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)  # (Q, C)
-    probes = np.argsort(qc, axis=1)[:, :nprobe]  # (Q, nprobe)
-    bc = spark.sparkContext.broadcast((qids, Q, centroids, books, probes))
 
-    # prune unprobed cells at the scan (partition/bucket pruning at scale)
-    probed_cells = sorted({int(c) for row in probes for c in row})
-    pruned = encoded.where(F.col("centroid_id").isin(probed_cells))
-
-    def adc_partial(batches):
-        q_ids, Q_, C, B, P = bc.value
-        mm, ncodes, ds = B.shape
-        nq = len(Q_)
+    def scorer(q):
+        Q = _matrix(q[1], len(q[1]))
+        nq = len(Q)
+        m, n_codes, dsub = books.shape
+        qc = ((Q[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)  # (Q, C)
+        probes = np.argsort(qc, axis=1)[:, :nprobe]  # (Q, nprobe)
         # per (query, probed cell) residual LUT: (Q, nprobe, m, n_codes)
-        luts = np.empty((nq, P.shape[1], mm, ncodes))
-        cell_lut_idx = {}  # (q, cell) -> probe slot
-        for qi in range(nq):
-            for pj, cell in enumerate(P[qi]):
-                r = (Q_[qi] - C[cell]).reshape(mm, ds)
-                luts[qi, pj] = ((r[:, None, :] - B) ** 2).sum(-1)
-                cell_lut_idx[(qi, int(cell))] = pj
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf["id"].to_numpy(dtype=np.int64)
-            cells = pdf["centroid_id"].to_numpy()
-            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, mm)
-            D = np.full((len(codes), nq), np.inf)
-            for qi in range(nq):
-                probe_set = {int(c) for c in P[qi]}
-                mask = np.isin(cells, list(probe_set))
-                if not mask.any():
-                    continue
-                idxs = np.nonzero(mask)[0]
-                dv = np.zeros(len(idxs))
-                for s in range(mm):
-                    # per-row LUT slot depends on the row's cell
-                    slots = np.array([cell_lut_idx[(qi, int(c))] for c in cells[idxs]])
-                    dv += luts[qi, slots, s, codes[idxs, s]]
-                D[idxs, qi] = dv
-            kk = min(k, D.shape[0])
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            out = pd.DataFrame(
-                {
-                    "__qid": np.repeat(q_ids, kk),
-                    "__bid": bids[idx.T.ravel()],
-                    "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-                }
-            )
-            yield out[np.isfinite(out["__dist"])]
+        resid = (Q[:, None, :] - centroids[probes]).reshape(nq, probes.shape[1], m, dsub)
+        luts = np.stack([((r[:, :, None, :] - books) ** 2).sum(-1) for r in resid])
+        # slot[q, cell] = the probe slot of cell for query q, -1 if unprobed
+        slot = np.full((nq, len(centroids)), -1)
+        slot[np.arange(nq)[:, None], probes] = np.arange(probes.shape[1])
+        qi = np.arange(nq)
 
-    partials = pruned.mapInPandas(adc_partial, "__qid BIGINT, __bid BIGINT, __dist DOUBLE")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
+        def score(batch):
+            slots = slot[:, batch.column(1).to_numpy()].T  # (rows, Q)
+            codes = _code_matrix(batch.column(2), m)
+            D = np.zeros(slots.shape)
+            for s in range(m):
+                D += luts[qi, slots, s, codes[:, s, None]]
+            D[slots < 0] = np.nan
+            return D, D
+
+        return score
+
     shortlist_k = k * rerank_factor if rerank_base is not None else k
-    out = partials.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= shortlist_k)
-    if rerank_base is None:
-        return out.select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.sqrt("__dist").alias("distance"),
+    topk = _exact_knn_gemm(
+        queries.select(query_id, vec_col),
+        encoded.select("id", "centroid_id", "codes"),
+        shortlist_k,
+        scorer,
+    )
+    if rerank_base is not None:
+        topk = _exact_rerank(
+            queries, rerank_base, topk, k, "euclidean", query_id, base_id, vec_col
         )
-    qdf = queries.select(F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec"))
-    cand = (
-        rerank_base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
-        .join(F.broadcast(out.select("__qid", "__bid")), "__bid")
-        .join(F.broadcast(qdf), "__qid")
-    )
-    rer = cand.select(
-        "__qid",
-        "__bid",
-        distance_expr("euclidean", F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-    )
-    w2 = Window.partitionBy("__qid").orderBy(F.col("__dist").asc_nulls_last(), F.col("__bid").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    else:
+        topk = topk.withColumn("__dist", F.sqrt("__dist"))
+    return _ranked_pairs(topk)
 
 
 # --- Scalar quantization (SQ8) ---------------------------------------------
@@ -904,7 +869,6 @@ def hard_negatives(
     base_id: str = "vec_id",
     vec_col: str = "embedding",
     impl: str = "gemm",
-    max_broadcast_queries: int = 65536,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query vector,
     the ``k`` nearest base vectors whose ``label_col`` DIFFERS from the
@@ -915,16 +879,18 @@ def hard_negatives(
     distance (zero-magnitude cosine) are excluded — a NULL-distance negative
     is useless for training. Ties break on (distance, base_id).
 
-    ``impl="gemm"`` (scale path): the query block (ids, vectors, labels) is
-    one bounded driver collect broadcast to every task; each Arrow batch of
-    the base side computes the distance matrix with one BLAS GEMM, masks
-    same-label pairs to +inf, and keeps its local top-k per query — the
-    merge shuffle carries Q*k rows per batch, never Q*B (the exact_knn
-    kernel shape with a label mask). ``impl="expr"`` is the sequential-fold
-    Catalyst path whose arithmetic a SQL oracle reproduces bit-for-bit.
+    ``impl="gemm"`` (scale path) runs on the exact KNN kernel
+    (operators.knn._exact_knn_gemm): the query ids, vectors and labels are
+    broadcast; each Arrow batch of the base side computes the distance
+    matrix with one BLAS GEMM, drops same-label pairs, and keeps its local
+    top-k per query — the merge shuffle carries Q*k rows per batch, never
+    Q*B. Ties break on (distance, base_id) at every step, so duplicates
+    straddling the k-th place keep the lowest ids, and a query side over
+    the kernel's row cap is processed in blocks automatically.
+    ``impl="expr"`` is the sequential-fold Catalyst path whose arithmetic
+    a SQL oracle reproduces bit-for-bit.
     """
     import numpy as np
-    import pandas as pd
 
     if impl == "expr":
         q = queries.select(
@@ -956,78 +922,27 @@ def hard_negatives(
             )
         )
 
-    spark = base.sparkSession
-    qrows = (
-        queries.select(query_id, vec_col, label_col)
-        .limit(max_broadcast_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_broadcast_queries:
-        raise ValueError(
-            f"query side exceeds max_broadcast_queries={max_broadcast_queries}; "
-            "mine negatives in blocks (pmod on the query id) as exact_knn does"
-        )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id BIGINT, rank INT, base_id BIGINT, distance DOUBLE"
-        )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qlab = np.array([r[2] for r in qrows])
-    bc = spark.sparkContext.broadcast((qids, qmat, qlab))
-    metric_key = metric.strip().lower()
+    knn_scorer = _metric_scorer(metric)
 
-    def partial_topk(batches):
-        q_ids, Q, q_labels = bc.value
-        qn = np.linalg.norm(Q, axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[base_id].to_numpy(dtype=np.int64)
-            blab = pdf[label_col].to_numpy()
-            B = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if metric_key == "cosine":
-                bn = np.linalg.norm(B, axis=1)
-                denom = np.outer(bn, qn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = 1.0 - (B @ Q.T) / denom
-                D[denom == 0] = np.inf  # undefined -> excluded
-            elif metric_key in ("euclidean", "l2"):
-                D = np.sqrt(
-                    np.maximum(
-                        (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-            elif metric_key == "dot_product":
-                D = -(B @ Q.T)
-            else:
-                raise ValueError(f"unknown metric {metric!r}")
-            D[blab[:, None] == q_labels[None, :]] = np.inf  # mask same-label
-            kk = min(k, len(bids))
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            dist = np.take_along_axis(D, idx, axis=0).T.ravel()
-            rows = pd.DataFrame(
-                {
-                    "__qid": np.repeat(q_ids, kk),
-                    "__bid": bids[idx.T.ravel()],
-                    "__dist": dist,
-                }
-            )
-            yield rows[np.isfinite(rows["__dist"])]
+    def scorer(q):
+        q_labels = q[2].to_numpy(zero_copy_only=False)
+        score = knn_scorer(q)
 
-    partials = base.select(base_id, vec_col, label_col).mapInPandas(
-        partial_topk, "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
-    )
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.col("__dist").alias("distance"),
+        def masked(batch):
+            D, _ = score(batch)
+            # same-label pairs and undefined (NaN) distances are never selected
+            labels = batch.column(2).to_numpy(zero_copy_only=False)
+            D[labels[:, None] == q_labels[None, :]] = np.nan
+            return D, D
+
+        return masked
+
+    return _ranked_pairs(
+        _exact_knn_gemm(
+            queries.select(query_id, vec_col, label_col),
+            base.select(base_id, vec_col, label_col),
+            k,
+            scorer,
         )
     )
 

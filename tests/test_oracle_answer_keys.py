@@ -1,8 +1,11 @@
 """Registry gates on the answer-key path vs the bit-exact DuckDB oracle at
 sf0.001 — the compare scripts/check_oracle.py runs (its row canonicalization
-and hash-hazard scan), for every live or candidate gate whose body
-calls the predicate compiler, operators.hybrid or read_xvec. The gates are
-found from their source, so a new gate on these paths is checked too."""
+and hash-hazard scan), for every live or candidate gate whose body calls
+the predicate compiler, operators.hybrid, read_xvec or the top-k family
+that shares the broadcast-query kernel of operators.knn (exact_knn,
+brute_force_topk, hard_negatives, pq_topk, ivfpq_topk and the neighbor
+statistics built on them). The gates are found from their source, so a
+new gate on these paths is checked too."""
 
 import inspect
 import os
@@ -17,7 +20,9 @@ sys.path.insert(0, os.path.join(ROOT, "scripts"))
 import check_oracle  # noqa: E402
 
 PATH_NAMES = ("compile_pnode", "where_pnode", "hybrid_ground_truth", "result_indices_table",
-              "operators.hybrid", "read_xvec")
+              "operators.hybrid", "read_xvec", "exact_knn", "brute_force_topk", "hard_negatives",
+              "pq_topk", "ivfpq_topk", "hubness_stats", "mutual_knn_pairs", "knn_label_accuracy",
+              "knn_overlap")
 
 
 def _gates():
@@ -34,7 +39,12 @@ GATES = _gates()
 
 
 def test_answer_key_gates_found():
-    assert {"hybrid_filtered_knn", "result_indices_hybrid"} <= {g[0] for g in GATES}
+    assert {
+        "hybrid_filtered_knn",
+        "result_indices_hybrid",
+        "pq_rerank_self_top1",
+        "embedding_hard_negatives",
+    } <= {g[0] for g in GATES}
 
 
 @pytest.mark.parametrize("name,fn,sql", GATES, ids=[g[0] for g in GATES])

@@ -5,8 +5,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from nbdatatools_spark.operators import knn
 from nbdatatools_spark.operators.similarity import (
     brute_force_topk,
+    hard_negatives,
+    ivfpq_build,
+    ivfpq_topk,
     pq_encode,
     pq_topk,
     pq_train,
@@ -118,8 +122,6 @@ def test_pq_rerank_recovers_exact_recall(clustered):
 
 
 def test_ivfpq_recall_and_pruning(clustered, spark):
-    from nbdatatools_spark.operators.similarity import ivfpq_build, ivfpq_topk
-
     enc, index = ivfpq_build(clustered, n_centroids=8, m=4, n_codes=32, seed=3)
     rows = enc.collect()
     assert len(rows) == 400 and all(len(r["codes"]) == 4 for r in rows)
@@ -145,8 +147,6 @@ def test_ivfpq_recall_and_pruning(clustered, spark):
 
 
 def test_ivfpq_nprobe_monotone(clustered, spark):
-    from nbdatatools_spark.operators.similarity import ivfpq_build, ivfpq_topk
-
     enc, index = ivfpq_build(clustered, n_centroids=8, m=4, n_codes=32, seed=3)
     q = clustered.where(F.col("vec_id") < 10)
     exact = {
@@ -162,6 +162,92 @@ def test_ivfpq_nprobe_monotone(clustered, spark):
         recalls.append(len(got & exact) / len(exact))
     assert recalls[0] <= recalls[1] + 0.05 and recalls[1] <= recalls[2] + 0.05
     assert recalls[2] >= 0.5  # raw ADC, all cells
+
+
+def _reference_codes(X, books):
+    """Per-subspace nearest code of each row of X, as bytes."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(X), m), dtype=np.uint8)
+    for s in range(m):
+        sub = X[:, s * dsub : (s + 1) * dsub]
+        codes[:, s] = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(-1).argmin(1)
+    return [c.tobytes() for c in codes]
+
+
+def test_encoders_match_numpy_reference(clustered):
+    """pq_encode (with and without an OPQ rotation) and ivfpq_build emit the
+    codes of a numpy encoder over the collected vectors, byte for byte."""
+    rows = clustered.orderBy("vec_id").collect()
+    ids = [r.vec_id for r in rows]
+    X = np.array([r.embedding for r in rows], dtype=np.float64)
+    books, R = pq_train(clustered, m=4, n_codes=16, seed=5, opq=True, opq_iters=2)
+    for rot in (None, R):
+        got = {r.id: r.codes for r in pq_encode(clustered, books, rotation=rot).collect()}
+        Y = X if rot is None else X @ rot
+        assert got == dict(zip(ids, _reference_codes(Y, books)))
+    enc, (C, B) = ivfpq_build(clustered, n_centroids=8, m=4, n_codes=32, seed=3)
+    cid = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+    want = dict(zip(ids, zip(cid.tolist(), _reference_codes(X - C[cid], B))))
+    assert {r.id: (r.centroid_id, r.codes) for r in enc.collect()} == want
+
+
+DUPS = [5, 13, 40, 77, 101, 150, 222, 301, 333, 390]
+
+
+@pytest.mark.parametrize("search", ["pq", "ivfpq"])
+def test_adc_boundary_ties_follow_lexsort(spark, clustered, search):
+    """Copies of a query vector have identical codes, so their ADC distances
+    tie and straddle k inside one Arrow batch: the top-k must be the first
+    k of a (distance, base_id) lexsort of the search's own ADC distances —
+    the lowest ids of the tie."""
+    vecs = {r.vec_id: r.embedding for r in clustered.collect()}
+    base = spark.createDataFrame(
+        [(i, vecs[5] if i in DUPS else vecs[i]) for i in sorted(vecs)], clustered.schema
+    ).coalesce(1)
+    q = base.where(F.col("vec_id").isin(5, 6))
+    if search == "pq":
+        books = pq_train(base, m=4, n_codes=16, seed=5)
+        enc = pq_encode(base, books)
+
+        def run(k):
+            return pq_topk(q, enc, books, k=k).collect()
+    else:
+        enc, index = ivfpq_build(base, n_centroids=8, m=4, n_codes=32, seed=3)
+
+        def run(k):
+            return ivfpq_topk(q, enc, index, k=k, nprobe=2).collect()
+
+    full, top = run(len(vecs)), run(4)
+    for qid in (5, 6):
+        ids = np.array([r.base_id for r in full if r.query_id == qid])
+        dist = np.array([r.distance for r in full if r.query_id == qid])
+        got = sorted((r.rank, r.base_id) for r in top if r.query_id == qid)
+        assert [b for _, b in got] == ids[np.lexsort((ids, dist))][:4].tolist()
+    assert sorted(r.base_id for r in top if r.query_id == 5) == DUPS[:4]
+
+
+def test_query_blocks_match_one_block(clustered, monkeypatch):
+    """A query side over the kernel's row cap runs in pmod blocks and gives
+    the rows of a single block."""
+    labeled = clustered.withColumn("label", (F.col("vec_id") % 3).cast("string"))
+    books = pq_train(clustered, m=4, n_codes=16, seed=5)
+    enc = pq_encode(clustered, books)
+    q = labeled.where(F.col("vec_id") < 8)
+    runs = (
+        lambda: pq_topk(q, enc, books, k=5),
+        lambda: hard_negatives(q, labeled, k=5),
+    )
+
+    def rows():
+        return [sorted(tuple(r) for r in run().collect()) for run in runs]
+
+    one = rows()
+    monkeypatch.setattr(knn, "MAX_BROADCAST_QUERIES", 3)
+    blocked = rows()
+    for a, b in zip(one, blocked):
+        assert [r[:3] for r in a] == [r[:3] for r in b]
+        np.testing.assert_allclose([r[3] for r in a], [r[3] for r in b], rtol=0, atol=1e-12)
+    assert len(one[0]) == len(one[1]) == 8 * 5
 
 
 # --- SQ8 scalar quantization ------------------------------------------------

@@ -118,6 +118,38 @@ def test_hard_negatives_gemm_matches_expr(spark, embeddings):
         assert rg.distance == pytest.approx(re_.distance, abs=1e-9)
 
 
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dot_product"])
+def test_hard_negatives_boundary_ties_match_expr(spark, metric):
+    """Copies of the query vector under other labels tie at the top and
+    straddle k inside one Arrow batch: gemm keeps the lowest ids of the
+    tie, as the (distance, base_id) rule of the expr path does. Integer
+    components make every tied distance bit-identical on both paths."""
+    rng = np.random.default_rng(7)
+    mat = rng.integers(-3, 3, size=(60, 4))  # never reaches [3, 3, 3, 3]
+    dup = [3, 7, 12, 20, 21, 30, 33, 41, 47, 52, 55, 59]
+    mat[dup] = 3
+    same = (3, 12, 33)  # the query's label: never a negative
+    base = spark.createDataFrame(
+        [
+            (i, [float(x) for x in row], "a" if i in same else "bc"[i % 2])
+            for i, row in enumerate(mat)
+        ],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, label STRING",
+    ).coalesce(1)
+    q = base.where(F.col("vec_id").isin(3, 5))
+    got = {
+        impl: [
+            (r.query_id, r.rank, r.base_id)
+            for r in hard_negatives(q, base, k=5, metric=metric, impl=impl)
+            .orderBy("query_id", "rank")
+            .collect()
+        ]
+        for impl in ("expr", "gemm")
+    }
+    assert got["gemm"] == got["expr"]
+    assert [b for qid, _, b in got["gemm"] if qid == 3] == [7, 20, 21, 30, 41]
+
+
 def test_hard_negatives_is_knn_restricted_to_other_labels(spark, embeddings):
     """Differential vs numpy: brute-force cosine over label-differing rows."""
     rows = embeddings.select("vec_id", "embedding", "label").collect()
